@@ -21,10 +21,15 @@ Rebuild of the reference's core (`DataframeModeler.scala`,
   emits (key, grad) rows; the merge is a *distributed* groupBy-key
   array sum (fixing the reference's flat reduce through the driver,
   SURVEY §4.3c) and only the final per-key gradients reach the driver.
+  Loss-only evaluation (``_loss_pass``) needs no merge: one narrow
+  map pass scores several step sizes at once and collects one
+  (loss sums, rows) row per partition.
 - **Training** ``fit`` (M3/M4, `Trainer.scala:170-193`): epoch
   schedule over sample fractions, gradient descent with bisection
-  line search; the mutated context re-broadcasts each step
-  (broadcasts are immutable — SURVEY §7.3 risk 2).
+  line search whose probes run in rounds of one loss-only job each
+  (⌈log₂ k⌉ jobs for a k-probe search); the mutated context
+  re-broadcasts each step (broadcasts are immutable — SURVEY §7.3
+  risk 2).
 
 Scale notes: the only driver-sized state is the parameter dict
 (capped by dictionary size — hash-bucket embeddings if categorical
@@ -124,6 +129,8 @@ class DataframeModeler:
         # the next call or via release_broadcasts() (unpersist, not
         # destroy — a re-used broadcast re-ships lazily from the driver)
         self._live_broadcasts: list = []
+        # probes consumed by each line search of the last fit()
+        self.probe_history: list[int] = []
 
     def release_broadcasts(self) -> None:
         """Drop executor copies of broadcasts from earlier
@@ -515,6 +522,35 @@ class DataframeModeler:
         return flat.mapInPandas(infer, schema=out_schema)
 
     # -- M2: distributed forward+backward ------------------------------
+    @staticmethod
+    def _labelled(pdf: pd.DataFrame, lchan: Channel) -> tuple[pd.DataFrame, list]:
+        """Drop the batch's rows with a null label; returns the kept
+        rows and their rendered labels."""
+        labels = _render_values(pdf[lchan.col.replace(".", "__")], lchan.dtype)
+        keep = [i for i, v in enumerate(labels) if v is not None]
+        if len(keep) < len(pdf):
+            pdf = pdf.iloc[keep].reset_index(drop=True)
+            labels = [labels[i] for i in keep]
+        return pdf, labels
+
+    @staticmethod
+    def _targets(
+        labels: list, lchan: Channel, params: dict[str, np.ndarray],
+        strat: "ModelingStrategy",
+    ) -> np.ndarray:
+        """Target tensor [n, classes] for rendered labels."""
+        # one lookup per DISTINCT label, not per row (the .get
+        # default would eagerly build a seeded tensor per row)
+        table: dict = {}
+        for v in labels:
+            if v not in table:
+                key = strat.key_for(lchan.path, v)
+                vec = params.get(key)
+                table[v] = (
+                    vec if vec is not None else strat.initial_representation(key)
+                )
+        return np.stack([table[v] for v in labels])
+
     def eval(
         self, df: DataFrame, network: Network, label_col: str,
         loss_only: bool = False,
@@ -525,18 +561,21 @@ class DataframeModeler:
         merged by a distributed groupBy-key array sum; only final
         per-key gradients reach the driver.
 
-        ``loss_only`` skips the backward pass and gradient shuffle — the
-        cheap forward probe the bisection line search runs several times
-        per optimizer step. ``params_override`` evaluates a trial
-        parameter set without mutating the context."""
-        chans = self.channels(df.schema)
-        label_chan = next(c for c in chans if c.col == label_col)
-        skip = {label_chan.path}
-        spark = df.sparkSession
+        ``loss_only`` skips the backward pass and the gradient merge:
+        it is the line search's loss pass (``_loss_pass``) at the single
+        step size t=0, and returns no gradients. ``params_override``
+        evaluates a trial parameter set without mutating the context."""
         eval_params = (
             params_override if params_override is not None
             else self.context.all_params()
         )
+        if loss_only:
+            [loss] = self._loss_pass(df, network, label_col, eval_params, {}, [0.0])
+            return loss, {}
+        chans = self.channels(df.schema)
+        label_chan = next(c for c in chans if c.col == label_col)
+        skip = {label_chan.path}
+        spark = df.sparkSession
         bc = broadcast_value(
             spark,
             (
@@ -549,47 +588,26 @@ class DataframeModeler:
                 network,
                 label_chan,
                 self.strategy,
-                loss_only,
             )
         )
         featurize = DataframeModeler._featurize
         route = DataframeModeler._route_feature_grads
+        labelled = DataframeModeler._labelled
+        targets = DataframeModeler._targets
 
         def fwd_bwd(batches):
-            params, stats, chans_b, size, power, skip_b, net, lchan, strat, fwd_only = bc.value
+            params, stats, chans_b, size, power, skip_b, net, lchan, strat = bc.value
             acc: dict[str, np.ndarray] = {}
             loss_sum, n_rows = 0.0, 0
             for pdf in batches:
-                if not len(pdf):
+                pdf, labels = labelled(pdf, lchan)
+                if not labels:
                     continue
-                labels = _render_values(pdf[lchan.col.replace(".", "__")], lchan.dtype)
-                keep = [i for i, v in enumerate(labels) if v is not None]
-                if not keep:
-                    continue
-                if len(keep) < len(pdf):
-                    pdf = pdf.iloc[keep].reset_index(drop=True)
-                    labels = [labels[i] for i in keep]
                 x, caches = featurize(
                     pdf, chans_b, params, stats, size, power, skip_b, strat
                 )
-                # one lookup per DISTINCT label, not per row (the .get
-                # default would eagerly build a seeded tensor per row)
-                table: dict = {}
-                for v in labels:
-                    if v not in table:
-                        key = strat.key_for(lchan.path, v)
-                        vec = params.get(key)
-                        table[v] = (
-                            vec if vec is not None else strat.initial_representation(key)
-                        )
-                target = np.stack([table[v] for v in labels])
+                target = targets(labels, lchan, params, strat)
                 w = len(pdf)
-                if fwd_only:
-                    logits, _ = net.forward(params, x)
-                    loss, _, _ = net.head.forward_loss(logits, target)
-                    loss_sum += loss * w
-                    n_rows += w
-                    continue
                 loss, grads, grad_x = net.loss_and_grads(params, x, target)
                 grads.update(route(grad_x, chans_b, caches, skip_b, strat))
                 loss_sum += loss * w
@@ -625,21 +643,106 @@ class DataframeModeler:
         merged = partials.groupBy("key").applyInPandas(
             merge_group, schema="key string, grad array<double>, loss double, n long"
         )
+        try:
+            rows = merged.collect()
+        finally:
+            # release on EVERY exit: a failed job must not leak the
+            # per-pass broadcast into a long-lived session
+            bc.unpersist()
         loss_total, n_total = 0.0, 0
         grads: dict[str, np.ndarray] = {}
-        params = eval_params
-        for row in merged.collect():
+        for row in rows:
             if row["key"] == LOSS_KEY:
                 loss_total, n_total = row["loss"], row["n"]
             else:
-                shape = params[row["key"]].shape if row["key"] in params else None
+                shape = eval_params[row["key"]].shape if row["key"] in eval_params else None
                 g = np.array(row["grad"])
                 grads[row["key"]] = g.reshape(shape) if shape else g
-        bc.unpersist()
         n_total = max(n_total, 1)
         for k in grads:
             grads[k] = grads[k] / n_total
         return (loss_total / n_total, grads)
+
+    def _loss_pass(
+        self,
+        df: DataFrame,
+        network: Network,
+        label_col: str,
+        base: dict[str, np.ndarray],
+        grads: dict[str, np.ndarray],
+        steps: list[float],
+    ) -> list[float]:
+        """Mean loss of the trial parameters ``base[k] - t * grads[k]``
+        for every step size t in ``steps``, in ONE Spark job: a
+        ``mapInPandas`` over ``df`` emits each partition's per-step
+        (loss sum, row count), collected straight to the driver — no
+        shuffle, no merge stage. Only ``base``, ``grads`` and the steps
+        are broadcast; executors build each trial parameter set.
+        Partition sums are added in collect (partition) order, so the
+        result is deterministic."""
+        chans = self.channels(df.schema)
+        label_chan = next(c for c in chans if c.col == label_col)
+        bc = broadcast_value(
+            df.sparkSession,
+            (
+                base,
+                grads,
+                steps,
+                self.context.stats,
+                chans,
+                self.strategy.default_size,
+                self.strategy.mapping_power,
+                {label_chan.path},
+                network,
+                label_chan,
+                self.strategy,
+            )
+        )
+        featurize = DataframeModeler._featurize
+        labelled = DataframeModeler._labelled
+        targets = DataframeModeler._targets
+
+        def losses(batches):
+            base_b, grads_b, steps_b, stats, chans_b, size, power, skip_b, net, lchan, strat = bc.value
+            trials = []
+            for t in steps_b:
+                trial = dict(base_b)
+                for k, g in grads_b.items():
+                    trial[k] = trial[k] - t * g
+                trials.append(trial)
+            loss_sums = [0.0] * len(trials)
+            n_rows = 0
+            for pdf in batches:
+                pdf, labels = labelled(pdf, lchan)
+                if not labels:
+                    continue
+                w = len(pdf)
+                for i, params in enumerate(trials):
+                    # trial parameters change the featurization (the
+                    # embeddings are parameters), so every step
+                    # featurizes the batch afresh
+                    x, _ = featurize(pdf, chans_b, params, stats, size, power, skip_b, strat)
+                    logits, _ = net.forward(params, x)
+                    loss, _, _ = net.head.forward_loss(
+                        logits, targets(labels, lchan, params, strat)
+                    )
+                    loss_sums[i] += loss * w
+                n_rows += w
+            yield pd.DataFrame({"loss": [loss_sums], "n": [n_rows]})
+
+        flat = self._flat_select(df, chans)
+        try:
+            rows = flat.mapInPandas(losses, schema="loss array<double>, n long").collect()
+        finally:
+            bc.unpersist()
+        totals = [0.0] * len(steps)
+        n_total = 0
+        for row in rows:
+            for i, s in enumerate(row["loss"]):
+                totals[i] += s
+            n_total += row["n"]
+        n_total = max(n_total, 1)
+        return [s / n_total for s in totals]
 
     # -- M3/M4: training loop ------------------------------------------
     def _line_search(
@@ -653,43 +756,55 @@ class DataframeModeler:
         max_probes: int = 3,
     ) -> float:
         """Bisection line search over the step size (the reference's
-        ``BisectionSearch``, `Trainer.scala:68-69,183-184`): ≥2
-        loss-only distributed probes per optimizer step, each a forward
-        pass over the SAME persisted batch (the probe cache — the
-        featurized tensors themselves cannot be reused across probes
-        because trial parameters change the featurization). Expands the
-        step while the loss improves, halves it while it regresses;
-        returns the best improving step, or 0.0 when none was found."""
+        ``BisectionSearch``, `Trainer.scala:68-69,183-184`). The rule is
+        sequential: probe t0; while the loss improves on f0, double the
+        step until a probe stops improving on the one before; otherwise
+        halve it until a probe improves on f0; stop after
+        max(2, max_probes) probes. Returns the best improving step, or
+        0.0 when none was found.
+
+        Every probe is a loss-only forward over the SAME persisted batch
+        (the probe cache — the featurized tensors themselves cannot be
+        reused across probes because trial parameters change the
+        featurization), so the probes are evaluated in rounds of one
+        ``_loss_pass`` job each and the rule is replayed on the driver
+        over the precomputed losses. Round 1 evaluates t0, 2·t0 and
+        t0/2, which settles every two-probe search; each later round
+        doubles the ladder of probes in the direction round 1 chose, up
+        to the cap. A k-probe search costs ⌈log₂ k⌉ jobs and at most
+        2k−1 forwards. ``probe_history`` records k, the probes the
+        sequential rule consumed, not the steps evaluated."""
         base = self.context.all_params()
         frozen = self.context.frozen
+        moved = {k: g for k, g in grads.items() if k in base and k not in frozen}
+        cap = max(2, max_probes)
 
-        def probe(t: float) -> float:
-            trial = dict(base)
-            for k, g in grads.items():
-                if k in trial and k not in frozen:
-                    trial[k] = trial[k] - t * g
-            loss, _ = self.eval(
-                batch, network, label_col, loss_only=True, params_override=trial
-            )
-            return loss
+        def losses(steps: list[float]) -> list[float]:
+            return self._loss_pass(batch, network, label_col, base, moved, steps)
 
-        probes: list[tuple[float, float]] = [(t0, probe(t0))]
-        if probes[-1][1] < f0:
-            while len(probes) < max(2, max_probes):
-                t_next = probes[-1][0] * 2.0
-                f_next = probe(t_next)
-                probes.append((t_next, f_next))
-                if f_next >= probes[-2][1]:
-                    break
-        else:
-            while len(probes) < max(2, max_probes):
-                t_next = probes[-1][0] / 2.0
-                f_next = probe(t_next)
-                probes.append((t_next, f_next))
-                if f_next < f0:
-                    break
-        self.probe_history.append(len(probes))
-        best_t, best_f = min(probes, key=lambda p: p[1])
+        up, down = t0 * 2.0, t0 / 2.0
+        f_t0, f_up, f_down = losses([t0, up, down])
+        expand = f_t0 < f0
+        ladder = [(t0, f_t0), (up, f_up) if expand else (down, f_down)]
+
+        def consumed() -> int | None:
+            """Probes the sequential rule takes over the ladder so far,
+            or None while it would probe past the ladder's end."""
+            for i in range(1, len(ladder)):
+                f_i = ladder[i][1]
+                if (f_i >= ladder[i - 1][1]) if expand else (f_i < f0):
+                    return i + 1
+            return len(ladder) if len(ladder) >= cap else None
+
+        while (k := consumed()) is None:
+            steps = []
+            t = ladder[-1][0]
+            for _ in range(min(len(ladder), cap - len(ladder))):
+                t = t * 2.0 if expand else t / 2.0
+                steps.append(t)
+            ladder.extend(zip(steps, losses(steps)))
+        self.probe_history.append(k)
+        best_t, best_f = min(ladder[:k], key=lambda p: p[1])
         return best_t if best_f < f0 else 0.0
 
     def fit(

@@ -382,3 +382,174 @@ def test_bucketed_overlay_respects_base_path_size():
         assert overlay.initial_representation(key).shape == (32,), key
     # non-bucketed paths keep base behavior end to end
     assert overlay.initial_representation("other=x").shape == (10,)
+
+
+# -- line search: rounds of loss-only jobs vs the sequential rule -------
+
+LINE_SEARCH_CASES = {
+    # name: (t0, max_probes). On the fixture batch the loss along -g
+    # falls from t=2^-6 to its minimum at t=0.5, rises from t=1, and
+    # stays above f0 from t=4 on.
+    "expand": (2.0**-6, 12),  # doubles to t=1, which stops improving
+    "contract": (64.0, 12),  # halves down to t=2, which improves on f0
+    "capped": (64.0, 4),  # four halvings, none improves: returns 0.0
+    "two_probe": (0.5, 12),  # t=1 does not improve on t=0.5
+}
+
+
+@pytest.fixture(scope="module")
+def line_search_batch(spark):
+    """A small persisted batch with its model, base loss and gradients."""
+    from mindseye_dataframes_spark.sources.staging import stage
+
+    rows = [
+        (f"c{i % 4}", float(i * 37 % 101), "ABC"[(i * 37 % 101) * 3 // 101])
+        for i in range(240)
+    ]
+    df = spark.createDataFrame(rows, "cat string, x double, label string").repartition(3)
+    batch = stage(df, "working")
+    batch.count()
+    modeler = DataframeModeler(
+        CategorizingStrategy(
+            "label", categories=3, value_index={"A": 0, "B": 1, "C": 2}, default_size=4
+        )
+    )
+    modeler.init_keys(batch, "label")
+    net = mlp("ls", 4, [8], 3)
+    for k, v in net.init_params().items():
+        modeler.context.layers[k] = v
+    f0, grads = modeler.eval(batch, net, "label")
+    yield modeler, net, batch, f0, grads
+    batch.unpersist()
+
+
+def _sequential_line_search(modeler, batch, net, grads, f0, t0, max_probes):
+    """The line search one probe at a time: one loss-only ``eval`` per
+    probe, in the order the rule asks for them. Returns the step and
+    the (t, loss) probes taken."""
+    base = modeler.context.all_params()
+
+    def probe(t):
+        trial = dict(base)
+        for k, g in grads.items():
+            if k in trial and k not in modeler.context.frozen:
+                trial[k] = trial[k] - t * g
+        loss, _ = modeler.eval(batch, net, "label", loss_only=True, params_override=trial)
+        return loss
+
+    probes = [(t0, probe(t0))]
+    if probes[-1][1] < f0:
+        while len(probes) < max(2, max_probes):
+            t_next = probes[-1][0] * 2.0
+            probes.append((t_next, probe(t_next)))
+            if probes[-1][1] >= probes[-2][1]:
+                break
+    else:
+        while len(probes) < max(2, max_probes):
+            t_next = probes[-1][0] / 2.0
+            probes.append((t_next, probe(t_next)))
+            if probes[-1][1] < f0:
+                break
+    best_t, best_f = min(probes, key=lambda p: p[1])
+    return (best_t if best_f < f0 else 0.0), probes
+
+
+@pytest.mark.parametrize("case", ["expand", "contract", "capped"])
+def test_line_search_matches_sequential_oracle(line_search_batch, case):
+    """The round-based search takes the step, and counts the probes,
+    of the sequential rule; its loss pass reproduces every probe's
+    loss."""
+    modeler, net, batch, f0, grads = line_search_batch
+    t0, max_probes = LINE_SEARCH_CASES[case]
+    want_step, probes = _sequential_line_search(modeler, batch, net, grads, f0, t0, max_probes)
+    losses = [f for _, f in probes]
+    # the case exercises the branch it names
+    if case == "expand":
+        assert losses[0] < f0 and losses[-1] >= losses[-2] and len(probes) > 3
+        assert want_step == probes[-2][0]
+    elif case == "contract":
+        assert losses[0] >= f0 and losses[-1] < f0 and len(probes) > 3
+        assert want_step == probes[-1][0]
+    else:
+        assert min(losses) >= f0 and len(probes) == max_probes and want_step == 0.0
+
+    modeler.probe_history = []
+    step = modeler._line_search(batch, net, "label", grads, f0, t0, max_probes)
+    assert step == want_step
+    assert modeler.probe_history == [len(probes)]
+
+    base = modeler.context.all_params()
+    moved = {k: g for k, g in grads.items() if k not in modeler.context.frozen}
+    got = modeler._loss_pass(batch, net, "label", base, moved, [t for t, _ in probes])
+    for want, have in zip(losses, got):
+        assert abs(have - want) <= 1e-12 * abs(want), (have, want)
+
+
+def test_loss_pass_matches_gradient_pass_loss(line_search_batch):
+    """The loss-only pass and the gradient pass (through the grouped
+    merge) agree on the loss of the same parameters."""
+    modeler, net, batch, f0, _ = line_search_batch
+    loss, grads = modeler.eval(batch, net, "label", loss_only=True)
+    assert grads == {}
+    assert abs(loss - f0) <= 1e-12 * abs(f0)
+
+
+def test_line_search_job_count(spark, line_search_batch):
+    """A two-probe search is one Spark job; a k-probe search is at most
+    ⌈log₂ k⌉ jobs."""
+    import math
+
+    modeler, net, batch, f0, grads = line_search_batch
+    sc = spark.sparkContext
+    for case, (t0, max_probes) in LINE_SEARCH_CASES.items():
+        group = f"line-search-{case}"
+        sc.setJobGroup(group, f"line search job count: {case}")
+        try:
+            modeler._line_search(batch, net, "label", grads, f0, t0, max_probes)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        k = modeler.probe_history[-1]
+        if case == "two_probe":
+            assert k == 2 and len(jobs) == 1, (k, jobs)
+        else:
+            assert k > 2 and len(jobs) <= math.ceil(math.log2(k)), (case, k, jobs)
+
+
+def test_failed_loss_and_gradient_passes_release_their_broadcasts(
+    line_search_batch, monkeypatch
+):
+    """A job that fails inside the UDF still unpersists the broadcast
+    its pass created."""
+    from pyspark.broadcast import Broadcast
+    from pyspark.errors import PythonException
+
+    from mindseye_dataframes_spark.featurize import modeler as modeler_mod
+
+    modeler, net, batch, f0, _ = line_search_batch
+    created, released = [], set()
+    make_broadcast, unpersist = modeler_mod.broadcast_value, Broadcast.unpersist
+
+    def recording_broadcast(spark, value):
+        bc = make_broadcast(spark, value)
+        created.append(bc)
+        return bc
+
+    def recording_unpersist(self, *args, **kwargs):
+        released.add(id(self))
+        return unpersist(self, *args, **kwargs)
+
+    monkeypatch.setattr(modeler_mod, "broadcast_value", recording_broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", recording_unpersist)
+    w_key = "layer/ls/fc0/W"
+    # a weight of the wrong shape fails the forward on the executor
+    bad = {**modeler.context.all_params(), w_key: np.zeros((3, 3))}
+    with pytest.raises(PythonException):
+        modeler.eval(batch, net, "label", params_override=bad)
+    with pytest.raises(PythonException):
+        modeler.eval(batch, net, "label", loss_only=True, params_override=bad)
+    with pytest.raises(PythonException):
+        modeler._line_search(batch, net, "label", {w_key: np.zeros((3, 3))}, f0, 0.5)
+    assert len(created) == 3
+    assert {id(bc) for bc in created} == released

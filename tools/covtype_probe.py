@@ -71,15 +71,11 @@ def build_raw(spark):
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    from pyspark.sql import SparkSession
+    from mindseye_dataframes_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.shuffle.partitions", "32")
-        .appName("covtype-probe")
-        .getOrCreate()
-    )
+    # the package's session: $SPARK_GRAFT_CPUS (default: every core)
+    # task threads and $SPARK_GRAFT_DRIVER_MEM (default 8g) of driver heap
+    spark = get_session(app_name="covtype-probe")
     from mindseye_dataframes_spark.featurize import (
         CategorizingStrategy,
         DataframeModeler,
@@ -162,6 +158,7 @@ def main() -> None:
     decreases = sum(1 for a, b in zip(ends, ends[1:]) if b < a)
     out = {
         "n_rows": n,
+        "master": spark.conf.get("spark.master"),
         "n_cols_raw": 55,
         "mid_layers": mid_layers,
         "max_probes": max_probes,
