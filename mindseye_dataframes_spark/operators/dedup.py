@@ -24,44 +24,28 @@ from pyspark.sql import functions as F
 from mindseye_dataframes_spark.functions.textfns import (
     LSH_BANDS,
     MINHASH_K,
-    distinct_tokens,
     lsh_band_keys,
     py_distinct_tokens,
     py_minhash_many,
     py_shingles,
-    shingles,
 )
 from mindseye_dataframes_spark.plans.parallelism import (
     ensure_min_parallelism,
     spread_for_compute,
 )
 
-def _features(text_col: str, feature: str):
+
+def _py_features(feature: str):
     """Feature set for similarity: 'shingles' (word 3-grams — order-
     sensitive, discriminative even on tiny vocabularies) or 'tokens'
     (order-insensitive bag). Shingles are the default: on a 31-word
     vocabulary token-set jaccard has a ~0.65 baseline between
     *unrelated* docs, so token-level LSH degenerates to all-pairs."""
     if feature == "shingles":
-        return shingles(text_col, 3)
-    if feature == "tokens":
-        return distinct_tokens(text_col)
-    raise ValueError(f"unknown feature: {feature}")
-
-
-def _py_features(feature: str):
-    if feature == "shingles":
         return py_shingles
     if feature == "tokens":
         return py_distinct_tokens
     raise ValueError(f"unknown feature: {feature}")
-
-
-def _features_udf(feature: str):
-    """Arrow-batched feature extraction (see textfns.py: interpreted
-    higher-order functions are ~25ms/doc; this path is ~µs/doc)."""
-    fn = _py_features(feature)
-    return F.pandas_udf(lambda texts: texts.map(fn), "array<string>")
 
 
 def _signature_udf(feature: str, k: int):
@@ -136,21 +120,6 @@ def minhash_signatures(
     return ensure_min_parallelism(df, id_col).select(
         F.col(id_col), sig(F.col(text_col)).alias("signature")
     )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-    feature: str = "shingles",
-) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing ≥1 LSH band bucket.
-    Returns distinct (id_a < id_b) pairs. The only join is the bucket
-    self-join — each side keyed by (band key), never all-pairs."""
-    sigs = minhash_signatures(df, text_col, id_col, k, feature)
-    return _candidate_pairs(sigs, id_col, bands, k)
 
 
 def _candidate_pairs(sigs: DataFrame, id_col: str, bands: int, k: int) -> DataFrame:

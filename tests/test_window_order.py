@@ -1,57 +1,48 @@
 """The driver checks only the FIRST 50 entries of queries() — the
-registry ordering IS the verification strategy (queries/__init__.py).
-These tests pin the round-14 window so a rotation mistake (stale
-queries pushed out, rows-only burning slots) fails loudly instead of
-silently shrinking coverage.
+registry order IS the verification strategy (queries/__init__.py).
 
-Round-14 shape: the round-13 driver window re-proved the r7-stale
-block (CORRECTNESS_r13 = PROVEN_R13, 50/50), so STALE_R07 is now
-empty and the r9-proven-never-since group is the re-verification
-front, behind this round's refresh set (REFRESH_R14: the optimization
-round's plan rewrites — the decomposed-verify trio q80/q213/q226, the
-GEMM-scored q184/q194, the eight size-derived streaming drains, and
-the null-pinned q50/q234 — re-prove at the head). Every registered
-query remains oracle-bearing.
+The order is derived from the committed ``CORRECTNESS_rNN.json`` files:
+queries whose code changed since their last green row
+(``CHANGED_SINCE_GREEN``) head the window, then queries with no green
+row, then the least recently proven, with oracle-less queries last.
+The first half of these tests pins that shape on the real registry and
+artifacts, so a rotation mistake (a never-green query left out, a
+fresh query holding a slot a staler one needs) fails loudly instead of
+silently shrinking coverage. The second half drives the derivation
+over synthetic artifacts in a temporary directory.
 """
 
 from __future__ import annotations
 
+import json
+from types import SimpleNamespace
+
 from mindseye_dataframes_spark.queries import (
-    PROVEN_R02,
-    PROVEN_R03,
-    PROVEN_R04,
-    PROVEN_R05,
-    PROVEN_R06,
-    PROVEN_R07,
-    PROVEN_R09,
-    PROVEN_R10,
-    PROVEN_R11,
-    PROVEN_R12,
-    PROVEN_R13,
-    REFRESH_R14,
-    STALE_R02,
-    STALE_R03,
-    STALE_R04,
-    STALE_R05,
-    STALE_R06,
-    STALE_R07,
-    STALE_R09,
+    ARTIFACT_DIR,
+    CHANGED_SINCE_GREEN,
+    last_green_rounds,
     load_all,
+    window_order,
 )
 
+WINDOW = 50
 
-def _group(name, qs):
-    from mindseye_dataframes_spark.queries import _order_key
 
-    return _order_key((name, qs[name]))[0]
+def _changed_head(qs, last):
+    """Changed-since-green entries the artifacts have not re-proven."""
+    return {
+        n for n, rnd in CHANGED_SINCE_GREEN.items()
+        if n in qs and last.get(n, 0) < rnd
+    }
 
 
 def test_refresh_set_heads_the_window():
+    # every CHANGED_SINCE_GREEN entry not yet re-proven occupies the
+    # first slots, before anything else — its green rows prove
+    # superseded code
     qs = load_all()
-    window = list(qs)[:50]
-    # the changed-after-check queries occupy the first slots, before
-    # anything else — their green rows prove superseded code
-    assert set(window[: len(REFRESH_R14)]) == REFRESH_R14
+    head = _changed_head(qs, last_green_rounds(ARTIFACT_DIR))
+    assert set(list(qs)[: len(head)]) == head
 
 
 def test_every_registered_query_is_oracle_bearing():
@@ -64,55 +55,41 @@ def test_every_registered_query_is_oracle_bearing():
 
 
 def test_unproven_and_stale_queries_fit_the_window():
+    # every never-green oracle query gets a slot this round, and the
+    # slots behind them start at the stalest proven round
     qs = load_all()
-    window = list(qs)[:50]
-    # every never-proven oracle query must get a slot this round
-    unproven = [
-        n
-        for n, q in qs.items()
-        if q.oracle is not None and n not in window and _group(n, qs) == 1
-    ]
-    assert not unproven, f"unproven oracle queries outside the window: {unproven}"
-    # r2-r7-stale are exhausted after the r6/r9/r10/r11/r12/r13
-    # rotations; the r9-proven-never-since group is the
-    # re-verification front and must fill every slot left after the
-    # refresh head and never-proven queries
-    assert not STALE_R02, "r2-stale should be empty after round 6"
-    assert not STALE_R03, "r3-stale should be empty after round 9"
-    assert not STALE_R04, "r4-stale should be empty after round 10"
-    assert not STALE_R05, "r5-stale should be empty after round 11"
-    assert not STALE_R06, "r6-stale should be empty after round 12"
-    assert not STALE_R07, "r7-stale should be empty after round 13"
-    stale_front = {
-        n for n in STALE_R09 - REFRESH_R14 if qs[n].oracle is not None
-    }
-    n_head = len(REFRESH_R14) + sum(1 for n in qs if _group(n, qs) == 1)
-    allowed_overflow = max(0, n_head + len(stale_front) - 50)
-    missing_stale = stale_front - set(window)
-    assert len(missing_stale) <= allowed_overflow, (
-        f"r9-stale queries rotated out beyond the overflow: {missing_stale}"
+    last = last_green_rounds(ARTIFACT_DIR)
+    window = list(qs)[:WINDOW]
+    never_green = [n for n, q in qs.items() if q.oracle is not None and n not in last]
+    outside = [n for n in never_green if n not in window]
+    assert not outside, f"never-green oracle queries outside the window: {outside}"
+    proven = [n for n, q in qs.items() if q.oracle is not None and n in last]
+    stalest = min(last[n] for n in proven)
+    assert any(last.get(n) == stalest for n in window), (
+        f"no query last proven in round {stalest} got a window slot"
     )
 
 
-def test_proven_sets_cover_only_registered_oracle_queries():
+def test_window_is_exactly_refresh_plus_unproven_plus_stalest():
+    # no slot may go to a query proven more recently than one waiting
+    # outside (the changed-since-green head aside)
     qs = load_all()
-    proven = (
-        PROVEN_R02
-        | PROVEN_R03
-        | PROVEN_R04
-        | PROVEN_R05
-        | PROVEN_R06
-        | PROVEN_R07
-        | PROVEN_R09
-        | PROVEN_R10
-        | PROVEN_R11
-        | PROVEN_R12
-        | PROVEN_R13
+    last = last_green_rounds(ARTIFACT_DIR)
+    head = _changed_head(qs, last)
+    window = [n for n in list(qs)[:WINDOW] if n not in head]
+    outside = [n for n in list(qs)[WINDOW:] if qs[n].oracle is not None]
+    newest_inside = max(last.get(n, 0) for n in window)
+    staler_outside = [n for n in outside if last.get(n, 0) < newest_inside]
+    assert not staler_outside, (
+        f"window holds round-{newest_inside} queries while staler "
+        f"{staler_outside} wait outside"
     )
-    unknown = proven - set(qs)
-    assert not unknown, f"proven sets name unregistered queries: {unknown}"
-    rows_only = {n for n in proven if qs[n].oracle is None}
-    assert not rows_only, f"proven sets contain oracle-less queries: {rows_only}"
+
+
+def test_changed_since_green_keys_are_registered():
+    qs = load_all()
+    unknown = set(CHANGED_SINCE_GREEN) - set(qs)
+    assert not unknown, f"CHANGED_SINCE_GREEN names unregistered queries: {unknown}"
 
 
 def test_readme_query_count():
@@ -134,13 +111,59 @@ def test_readme_query_count():
     )
 
 
-def test_window_is_exactly_refresh_plus_unproven_plus_stalest():
-    qs = load_all()
-    window = set(list(qs)[:50])
-    # no slot may be wasted on a query proven more recently than r9
-    # while a staler or unproven one waits outside
-    outside = [n for n in qs if n not in window and _group(n, qs) <= 9]
-    wasted = [n for n in window if _group(n, qs) > 9]
-    assert not (outside and wasted), (
-        f"window wastes slots {wasted} while {outside} wait outside"
-    )
+# --- the derivation over synthetic artifacts --------------------------------
+
+_GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+
+
+def _write_round(d, rnd, rows):
+    (d / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+
+def _registry(*names, rows_only=()):
+    return {
+        n: SimpleNamespace(oracle=None if n in rows_only else "SELECT 1")
+        for n in names
+    }
+
+
+def test_red_row_is_not_green(tmp_path):
+    _write_round(tmp_path, 3, {
+        "ok": _GREEN,
+        "rows": {**_GREEN, "rows_match": False},
+        "schema": {**_GREEN, "schema_match": False},
+        "hash": {**_GREEN, "hash_match": False},
+        "err": {**_GREEN, "err": "Py4JJavaError"},
+    })
+    assert last_green_rounds(tmp_path) == {"ok": 3}
+
+
+def test_later_green_row_wins(tmp_path):
+    _write_round(tmp_path, 2, {"a": _GREEN, "b": _GREEN})
+    _write_round(tmp_path, 7, {"a": _GREEN, "b": {**_GREEN, "hash_match": False}})
+    _write_round(tmp_path, 10, {"c": _GREEN})
+    assert last_green_rounds(tmp_path) == {"a": 7, "b": 2, "c": 10}
+    # never-green first, then by last green round; rows-only last
+    reg = _registry("a", "b", "c", "d", "e", rows_only=("e",))
+    assert window_order(reg, tmp_path) == ["d", "b", "a", "c", "e"]
+
+
+def test_no_artifacts_orders_by_name(tmp_path):
+    reg = _registry("q3", "q1", "q2")
+    assert window_order(reg, tmp_path) == ["q1", "q2", "q3"]
+
+
+def test_changed_entry_heads_window_until_proven(tmp_path, monkeypatch):
+    _write_round(tmp_path, 3, {"a": _GREEN, "b": _GREEN, "z": _GREEN})
+    reg = _registry("a", "b", "new", "z")
+    monkeypatch.setitem(CHANGED_SINCE_GREEN, "z", 4)
+    assert window_order(reg, tmp_path) == ["z", "new", "a", "b"]
+    # a red round-4 row leaves it at the head
+    _write_round(tmp_path, 4, {"z": {**_GREEN, "err": "boom"}})
+    assert window_order(reg, tmp_path)[0] == "z"
+    # a green row of its round expires the entry
+    _write_round(tmp_path, 4, {"z": _GREEN})
+    assert window_order(reg, tmp_path) == ["new", "a", "b", "z"]
+    # so does a green row of a later round
+    monkeypatch.setitem(CHANGED_SINCE_GREEN, "a", 2)
+    assert window_order(reg, tmp_path) == ["new", "a", "b", "z"]
